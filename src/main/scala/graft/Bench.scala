@@ -1,71 +1,105 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graftbridge.Bridge
 object Bench {
 
-  /** Queries whose timed body REWRITES tables (layout writers,
-    * format round-trips) or re-runs a full streaming job per
-    * invocation. Their "warm" numbers re-pay that work by design
-    * (q57's warm rebuilds two bucketed tables), so totals are
-    * reported per family: read-path warm is the compile-jitter-free
-    * series for round-over-round comparison; write-path cost is
-    * one-time-amortized in production and belongs in its own bucket.
+  /** One query's bench record: seconds per run (`None` = that run threw
+    * and was not timed) and the action jobs the cold builder call
+    * started. Queries whose builder runs actions rewrite tables, stage
+    * inputs or run a streaming job per invocation, so their "warm"
+    * re-pays that work by design (q57's warm rebuilds two bucketed
+    * tables): totals are reported per family, with read-path warm as
+    * the jitter-free round-over-round series.
     */
-  private val writePath = Set(
-    "q45_csv_roundtrip", "q55_json_roundtrip", "q56_orc_roundtrip",
-    "q57_bucketed_join", "q58_sorted_layout", "q63_text_roundtrip",
-    "q70_zorder_layout", "q72_compact", "q73_schema_evolution",
-    "q74_partitioned_layout", "q75_dpp_join", "q78_partitioned_bucketed",
-    "q80_compact_partitioned", "dedup_simhash_bucketed_probe",
-    // round 10: bucketed-table writes (band index; churn + compaction)
-    // and the two new streaming-fold runs re-pay staging/state writes
-    // per invocation, like their round-8/9 siblings
-    "dedup_minhash_bucketed_probe", "dedup_simhash_index_compact",
-    "streaming_fold_resume_parity", "pipeline_ingest_fold",
-    "streaming_ingest_resume_parity",
-    // round 11: the delta-publish fold rewrites staging, state, and a
-    // compaction per invocation; the partitioned band index rewrites
-    // its partitioned+bucketed table per invocation; the evolved
-    // merge rewrites its stored legacy index per invocation
-    "streaming_fold_delta_parity", "dedup_minhash_partitioned_probe",
-    "dedup_simhash_evolved_merge", "dedup_simhash_delta_probe",
-    // round 12: the stored-stats delta probe and the minhash delta
-    // probe rewrite a bucketed table + stage/state dirs and run a
-    // 2-leg stream per invocation; the merge-fold parity re-runs its
-    // stream + compaction per invocation
-    "dedup_simhash_delta_stats_probe", "dedup_minhash_delta_probe",
-    "streaming_merge_fold_parity", "eval_auc_merge_fold",
-    "dedup_spans_delta_probe", "ann_ivf_delta_probe",
-    // round 13: the minhash stats-store probe runs a 2-store 2-leg
-    // stream + bucketed table write per invocation; the retrain and
-    // re-shard cutovers rebuild BOTH index generations + a 2-leg stream
-    "dedup_minhash_delta_stats_probe", "ann_ivf_retrain_cutover",
-    "dedup_minhash_reshard_cutover",
-    "streaming_dedup_parity", "streaming_index_delete_parity",
-    "streaming_interval_parity",
-    "streaming_ivf_ingest_parity", "streaming_minhash_ingest_parity",
-    "streaming_quality_parity", "streaming_sessions_parity",
-    "streaming_simhash_ingest_parity", "streaming_static_join_parity",
-    "streaming_tumbling_parity")
+  final case class Run(name: String, cold: Option[Double],
+                       warm: Option[Double], builderJobs: Int) {
+    def failed: Boolean = cold.isEmpty || warm.isEmpty
+    def write: Boolean = builderJobs > 0
+  }
+
+  private val builderTag = "graft_bench_builder"
+
+  // Materialize through the noop sink, NOT count(): under
+  // df.count() Catalyst prunes every column and then ELIMINATES
+  // whole subtrees whose output is unreferenced — a final left join
+  // against a unique (grouped) key drops entirely, and with it the
+  // plan above it. Rounds 1-5 timed count(), which reduced
+  // dedup_minhash/dedup_simhash (and window-final queries like
+  // q26/q66) to bare scan counts (tools/PlanAudit detects this; the
+  // round-6 disclosure is in SURVEY.md). The noop writer consumes
+  // every output row with all columns live, so the timed number is
+  // the work a real consumer pays, at zero sink cost.
+  private def exec(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def seconds(fn: => Unit): Double = {
+    val t0 = System.nanoTime()
+    fn
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Seconds `fn` took, or `None` (reported on stderr) when it threw. */
+  private def time(name: String)(fn: => Unit): Option[Double] =
+    try Some(seconds(fn)) catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: $e")
+      None
+    }
+
+  // State hygiene between timed runs (graft.Hygiene — shared with
+  // Verify): each bench invocation builds a fresh DataFrame, so
+  // dropping every persisted RDD + cached relation after the noop
+  // write materializes is safe, and blocking+GC makes each timed run
+  // see the same clean deterministic session (round 4 measured what
+  // happens without this: read-family "warm" slower than cold).
+  private def hygiene(spark: SparkSession): Unit =
+    Hygiene.clearAll(spark, blocking = true, gc = true)
+
+  /** Time one query cold (fresh plan, including per-plan codegen
+    * compile — the number comparable to BASELINE.md) then warm (second
+    * run of the same query: plan/codegen caches hot, what a resident
+    * cluster would see). The cold builder call runs under a job tag; a
+    * listener counts the tagged jobs that belong to a SQL execution (an
+    * action: write, collect, count, streaming micro-batch), read only
+    * after the listener bus has drained, so the count is exact and
+    * repeatable. Opening a parquet table also starts a job (schema
+    * inference), but outside any SQL execution, so it does not count.
+    */
+  def runQuery(spark: SparkSession, name: String, sfDir: String)
+              (fn: (SparkSession, String) => DataFrame): Run = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.tags").exists(_.split(',').contains(builderTag)) &&
+            prop(SQLExecution.EXECUTION_ID_KEY).isDefined) jobs.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val cold = time(name) {
+        sc.addJobTag(builderTag)
+        val df = try fn(spark, sfDir) finally sc.removeJobTag(builderTag)
+        exec(df)
+      }
+      hygiene(spark)
+      val warm = time(name)(exec(fn(spark, sfDir)))
+      hygiene(spark)
+      Bridge.drainListenerBus(sc)
+      Run(name, cold, warm, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional arg (local iteration only; the driver passes none):
     // comma-separated query names to bench just that subset
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(',').toSet) else None
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive TIMESTAMP(MICROS) must read as session-tz TIMESTAMP (not
-      // NTZ) so event-time ops and epoch casts keep rounds-1-5 semantics
-      // and scan-level pushdown (Tables normalizes as a fallback)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     // absorb one-time JVM/classloading/scan-setup cost so per-query
     // numbers measure the queries. Whole-stage codegen compiles per
     // PLAN SHAPE, so warming one query does not absorb another's
@@ -75,28 +109,6 @@ object Bench {
       spark.range(1000).selectExpr("sum(id)").collect()
       SparkEntry.queries.get("q01_pricing_summary").foreach(_(spark, sfDir).count())
     } catch { case _: Throwable => }
-    // cold = fresh plan (includes per-plan codegen compile, the number
-    // comparable to BASELINE.md); warm = second run of the same query
-    // (plan/codegen caches hot — what a resident cluster would see).
-    // Read-path warm is the stable round-over-round basis; write-path
-    // warm re-pays table rewrites / streaming runs (see writePath).
-    def time(fn: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try fn catch { case _: Throwable => }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Materialize through the noop sink, NOT count(): under
-    // df.count() Catalyst prunes every column and then ELIMINATES
-    // whole subtrees whose output is unreferenced — a final left join
-    // against a unique (grouped) key drops entirely, and with it the
-    // plan above it. Rounds 1-5 timed count(), which reduced
-    // dedup_minhash/dedup_simhash (and window-final queries like
-    // q26/q66) to bare scan counts (tools/PlanAudit detects this; the
-    // round-6 disclosure is in SURVEY.md). The noop writer consumes
-    // every output row with all columns live, so the timed number is
-    // the work a real consumer pays, at zero sink cost.
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     // Host-factor calibration probe (round-7 verdict task 1): a FIXED
     // synthetic workload — seeded range → hash-keyed two-level
     // aggregate, zero IO, constant size — timed at suite start and
@@ -114,7 +126,7 @@ object Bench {
     // drift. The discard is symmetric in both calls so pre and post
     // measure the same steady state.
     def calibrate(): Double = {
-      def once(): Double = time(exec(
+      def once(): Double = seconds(exec(
         spark.range(0, 20000000L, 1, 32)
           .selectExpr("id * 2654435761 % 1000003 AS k", "id % 97 AS v")
           .groupBy("k")
@@ -122,43 +134,34 @@ object Bench {
             org.apache.spark.sql.functions.count("*"))))
       once() // discarded: absorb the probe's own codegen/JIT warmup
       val runs = Seq(once(), once(), once()).sorted
-      hygiene()
+      hygiene(spark)
       runs(1)
     }
-    // State hygiene between timed runs (graft.Hygiene — shared with
-    // Verify): each bench invocation builds a fresh DataFrame, so
-    // dropping every persisted RDD + cached relation after the noop
-    // write materializes is safe, and blocking+GC makes each timed run
-    // see
-    // the same clean deterministic session (round 4 measured what
-    // happens without this: read-family "warm" slower than cold).
-    def hygiene(): Unit = Hygiene.clearAll(spark, blocking = true, gc = true)
     val calibPre = calibrate()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))
-      .map { case (name, fn) =>
-        val cold = time(exec(fn(spark, sfDir)))
-        hygiene()
-        val warm = time(exec(fn(spark, sfDir)))
-        hygiene()
-        (name, cold, warm)
-      }
-    def json(sel: ((String, Double, Double)) => (String, Double)): String =
-      results.map(sel).map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val totalWarm = results.map(_._3).sum
-    val (w, r) = results.partition(x => writePath.contains(x._1))
-    val fam = s""""families":{"read":{"n":${r.size},"cold":${r.map(_._2).sum},"warm":${r.map(_._3).sum}},""" +
-      s""""write":{"n":${w.size},"cold":${w.map(_._2).sum},"warm":${w.map(_._3).sum}}}"""
+      .map { case (name, fn) => runQuery(spark, name, sfDir)(fn) }
+    // a query with a failed run is listed in `errors` and left out of
+    // every timed field: totals, per-query maps and families
+    val (failed, results) = runs.partition(_.failed)
+    val errors = failed.map(x => "\"" + x.name + "\"").mkString("[", ",", "]")
+    def json[T](sel: Run => T): String =
+      results.map(x => s"\"" + x.name + "\":" + sel(x)).mkString("{", ",", "}")
+    def cold(x: Run): Double = x.cold.get
+    def warm(x: Run): Double = x.warm.get
+    val total = results.map(cold).sum
+    val totalWarm = results.map(warm).sum
+    val (w, r) = results.partition(_.write)
+    val fam = s""""families":{"read":{"n":${r.size},"cold":${r.map(cold).sum},"warm":${r.map(warm).sum}},""" +
+      s""""write":{"n":${w.size},"cold":${w.map(cold).sum},"warm":${w.map(warm).sum}}}"""
     // Subset runs (local iteration) are tagged so their partial totals
-    // can never be mistaken for a full-suite artifact, and they do NOT
-    // overwrite BENCH_LOCAL.json — only the driver-shape full run pins
-    // the file a later reader would quote.
+    // can never be mistaken for a full-suite artifact, and they write
+    // BENCH_LOCAL_subset.json instead of overwriting BENCH_LOCAL.json —
+    // only a full-suite run pins the file a later reader would quote.
     // tag with the count of queries actually benched (a misspelled
     // name silently drops out of the filter — the requested-name count
     // would overstate the run)
-    val subsetTag = only.map(_ => s""""subset":${results.size},""").getOrElse("")
+    val subsetTag = only.map(_ => s""""subset":${runs.size},""").getOrElse("")
     val calibPost = calibrate()
     // calib-NORMALIZED per-query values (round-13, the round-12
     // verdict's item 7): the host's speed factor has ranged 1.2–6.1
@@ -180,16 +183,17 @@ object Bench {
     // to 4 decimals (0.1 ms — far below host noise) and moves the two
     // calib-NORMALIZED maps to the FILE artifact only, roughly halving
     // the line. BENCH_LOCAL.json is the authoritative full-precision
-    // copy: all four maps, unrounded.
+    // copy: all four maps, unrounded, plus the per-query builder job
+    // counts that decide the write family.
     def r4(v: Double): Double = math.rint(v * 10000) / 10000
-    val line = s"""{"metric":"total","value":$total,"unit":"sec",$subsetTag"queries":${json(x => (x._1, r4(x._2)))},"total_warm":$totalWarm,"queries_warm":${json(x => (x._1, r4(x._3)))},$fam,$calib,"sf":"$sfDir"}"""
-    val fileLine = s"""{"metric":"total","value":$total,"unit":"sec",$subsetTag"queries":${json(x => (x._1, x._2))},"total_warm":$totalWarm,"queries_warm":${json(x => (x._1, x._3))},"queries_norm":${json(x => (x._1, norm(x._2)))},"queries_warm_norm":${json(x => (x._1, norm(x._3)))},$fam,$calib,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec",$subsetTag"queries":${json(x => r4(cold(x)))},"total_warm":$totalWarm,"queries_warm":${json(x => r4(warm(x)))},"errors":$errors,$fam,$calib,"sf":"$sfDir"}"""
+    val fileLine = s"""{"metric":"total","value":$total,"unit":"sec",$subsetTag"queries":${json(cold)},"total_warm":$totalWarm,"queries_warm":${json(warm)},"queries_norm":${json(x => norm(cold(x)))},"queries_warm_norm":${json(x => norm(warm(x)))},"builder_jobs":${json(_.builderJobs)},"errors":$errors,$fam,$calib,"sf":"$sfDir"}"""
     println(line)
     // belt-and-suspenders: the authoritative copy as a file, in case a
     // harness parses logs that interleave, prefix, or truncate stdout
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), fileLine)
-      catch { case _: Throwable => }
+    val artifact = if (only.isEmpty) "BENCH_LOCAL.json" else "BENCH_LOCAL_subset.json"
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), fileLine)
+    catch { case _: Throwable => }
     spark.stop()
   }
 }

@@ -318,7 +318,7 @@ object GraphOps {
           dir, s"lp$i")
         rounds += labels
         // stage() already ran the write action, so this returns
-        // immediately (ObsProbe verified the listener fires for writes)
+        // immediately (OpsSpec pins that observations fire for writes)
         converged = obs.get("n_changed").asInstanceOf[Long] == 0L
       } else {
         labels = stage(upd.select(col("node"), col("label")), dir, s"lp$i")

@@ -476,22 +476,22 @@ object DeltaState {
     * store (keep the store list's ORDER stable across resumes).
     * Returns stateDir → resolved final state.
     *
-    * `concurrentStores = true` (default; round 13) publishes the N
-    * stores' deltas CONCURRENTLY off the shared pinned batch — the
-    * [[StreamingOps.foreachBatchFoldMulti]] fold-pool design carried
-    * to the delta protocol: a query-scoped thread pool, each fold
-    * thread tagged with the `graft_folds` scheduler pool so a FAIR
-    * scheduler splits executor slots evenly across stores. Safe by
+    * The stores' deltas publish CONCURRENTLY (round 13) off the shared
+    * pinned batch — the [[StreamingOps.foreachBatchFoldMulti]]
+    * fold-pool design carried to the delta protocol: a query-scoped
+    * thread pool, each fold thread tagged with the `graft_folds`
+    * scheduler pool so a FAIR scheduler splits executor slots evenly
+    * across stores. Safe by
     * the same isolation argument — each store's commit protocol
     * never leaves its own dir, so a failed publish redoes alone on
-    * replay regardless of what its siblings did; `false` keeps the
-    * serialized behavior for A/B measurement (tools/FoldAB).
+    * replay regardless of what its siblings did. The
+    * concurrent-vs-serialized measurement is recorded in BASELINE.md
+    * ("Round-13 store-publish concurrency A/B").
     */
   def foreachBatchStoreFolds(stream: DataFrame, stores: Seq[NamedDeltaStore],
                              resume: Boolean = false,
                              compactEvery: Int = 8,
-                             retainBases: Int = 2,
-                             concurrentStores: Boolean = true): Map[String, DataFrame] = {
+                             retainBases: Int = 2): Map[String, DataFrame] = {
     require(stores.nonEmpty, "foreachBatchStoreFolds: no stores")
     require(stores.map(_.stateDir).distinct.size == stores.size,
       "foreachBatchStoreFolds: duplicate store dirs")
@@ -508,38 +508,12 @@ object DeltaState {
         "checkpoint lives beside the FIRST store, so the store list must " +
         "keep the same ORDER (and dirs) across resumes — a reordered list " +
         "looks for the checkpoint beside the wrong store (round-12 advice)")
-    // QUERY-scoped fold pool (the foreachBatchFoldMulti rationale:
-    // built once, reused by every trigger — constructing it per
-    // micro-batch was the measured overhead the r12 A/B removed)
-    val concurrent = concurrentStores && stores.size > 1
-    val pool =
-      if (concurrent) java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(stores.size, 8))
-      else null
-    val ec =
-      if (concurrent) scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      else null
-    // run `f` over every store — concurrently on the fold pool when
-    // enabled, each pool thread tagged into the shared graft_folds
-    // scheduler pool (a local property is per-thread, so it must be
-    // set on the thread actually submitting the Spark jobs); ALL
-    // futures drain before the first failure rethrows, so no store is
-    // mid-publish when a failed trigger tears down (its commit
-    // protocol is crash-safe regardless — this keeps teardown orderly)
+    // run `f` over every store concurrently on the query-scoped fold
+    // pool (the foreachBatchFoldMulti pool: graft_folds-tagged threads,
+    // every future drained before the first failure rethrows)
+    val pool = new StreamingOps.FoldPool(spark, stores.size)
     def forEachStore(f: NamedDeltaStore => Unit): Unit =
-      if (!concurrent) stores.foreach(f)
-      else {
-        val futs = stores.map(st => scala.concurrent.Future {
-          spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", "graft_folds")
-          f(st)
-        }(ec))
-        val settled = futs.map(fu => scala.util.Try(
-          scala.concurrent.Await.result(
-            fu, scala.concurrent.duration.Duration.Inf)))
-        settled.collectFirst { case scala.util.Failure(e) => throw e }
-        ()
-      }
+      pool.awaitAll(stores.map(st => pool.submit(f(st))))
     try {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -560,7 +534,7 @@ object DeltaState {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally if (pool != null) pool.shutdown()
+    } finally pool.shutdown()
     stores.map(st => st.stateDir -> st.spec.resolve(spark, st.stateDir)).toMap
   }
 }

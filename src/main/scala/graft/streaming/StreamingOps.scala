@@ -466,6 +466,39 @@ object StreamingOps {
     spark.read.parquet(s"$stateDir/v${latestCommitted(spark, stateDir)}")
   }
 
+  /** The pool the multi-store folds run on, QUERY-scoped (round 12: the
+    * round-11 verdict's task 5 — the executor was built inside
+    * foreachBatch, once per micro-batch; it belongs at query scope,
+    * created once and reused by every trigger). Under a FAIR scheduler
+    * each fold's jobs land in the shared "graft_folds" pool so N stores
+    * split executor slots evenly instead of FIFO-starving the later
+    * folds; a local property is per-thread, so it is set on the pool
+    * thread actually submitting the jobs (no-op under FIFO).
+    */
+  private[streaming] final class FoldPool(spark: SparkSession, stores: Int) {
+    private val pool =
+      java.util.concurrent.Executors.newFixedThreadPool(math.min(stores, 8))
+    val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+
+    def submit[T](body: => T): scala.concurrent.Future[T] =
+      scala.concurrent.Future {
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft_folds")
+        body
+      }(ec)
+
+    /** Drain ALL futures before rethrowing the first failure: a fold
+      * still mid-publish when the trigger fails would otherwise race the
+      * teardown (its commit protocol is crash-safe regardless — this
+      * just keeps the failure path orderly). */
+    def awaitAll(futs: Seq[scala.concurrent.Future[Any]]): Unit =
+      futs.map(f => scala.util.Try(scala.concurrent.Await.result(
+          f, scala.concurrent.duration.Duration.Inf)))
+        .collectFirst { case scala.util.Failure(e) => throw e }
+
+    def shutdown(): Unit = pool.shutdown()
+  }
+
   /** [[foreachBatchFold]] over MANY stores at once — the ingest
     * capstone shape: one crawl/CDC feed maintains every index and
     * monitoring state side-by-side (minhash band index + its bucket
@@ -496,11 +529,9 @@ object StreamingOps {
     *
     * Returns name → final committed state.
     *
-    * @param concurrentFolds false serializes the store publishes
-    *              (tools/FoldAB's same-window baseline — the round-10
-    *              behavior, kept ONLY so the concurrency win stays
-    *              measurable in isolation; production keeps the
-    *              default)
+    * The concurrent-vs-serialized publish measurement is recorded in
+    * BASELINE.md ("Round-12 fold-concurrency A/B").
+    *
     * @param shared named per-batch derivations (key → transform of the
     *              pinned batch), each computed, pinned and materialized
     *              ONCE per trigger before the folds run; a [[FoldSpec]]
@@ -515,7 +546,6 @@ object StreamingOps {
                             specs: Seq[FoldSpec],
                             resume: Boolean = false,
                             retain: Int = 2,
-                            concurrentFolds: Boolean = true,
                             shared: Seq[(String, DataFrame => DataFrame)] = Nil): Map[String, DataFrame] = {
     require(specs.nonEmpty, "foreachBatchFoldMulti: no fold specs")
     require(specs.map(_.name).distinct.size == specs.size,
@@ -528,6 +558,12 @@ object StreamingOps {
     require(specs.forall(_.input.forall(sharedKeys.contains)),
       s"foreachBatchFoldMulti: a spec references a shared derivation not in " +
         s"${sharedKeys.mkString("{", ",", "}")}")
+    // the converse: an unreferenced derivation would be computed every
+    // trigger and its future never awaited
+    val referenced = specs.flatMap(_.input).toSet
+    require(sharedKeys.forall(referenced.contains),
+      s"foreachBatchFoldMulti: shared derivations no spec reads: " +
+        s"${(sharedKeys -- referenced).mkString("{", ",", "}")}")
     val spark = stream.sparkSession
     def dirOf(name: String) = s"$stateRoot/$name"
     if (!resume) {
@@ -540,13 +576,7 @@ object StreamingOps {
       s"foreachBatchFoldMulti: resume=true but state or checkpoint missing " +
         s"under $stateRoot — a lost checkpoint renumbers batch ids and the " +
         "replay-skip would silently drop new data")
-    // QUERY-scoped fold pool (round 12: the round-11 verdict's task 5
-    // — the executor was built inside foreachBatch, once per
-    // micro-batch; it belongs at query scope, created once and reused
-    // by every trigger)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(specs.size, 8))
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val pool = new FoldPool(spark, specs.size)
     try {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -560,10 +590,10 @@ object StreamingOps {
           // and pinned themselves, so every store naming one reads a
           // computed cache instead of re-deriving it per store. Each is
           // materialized exactly once (an eager count — the pin's own
-          // racing-first-touch rationale); on the concurrent path that
-          // count runs as a pool task and dependent folds CHAIN on its
-          // future (no blocking barrier: independent stores start
-          // immediately, exactly as without derivations, so the
+          // racing-first-touch rationale); that count runs as a pool
+          // task and dependent folds CHAIN on its future (no blocking
+          // barrier: independent stores start immediately, exactly as
+          // without derivations, so the
           // derivation hides under the same concurrency the folds do —
           // a first cut materialized it on the trigger thread before
           // any fold was submitted, which put it alone on the critical
@@ -580,46 +610,17 @@ object StreamingOps {
               d.count()
               d
             }
-            if (!concurrentFolds) {
-              val derived = shared.map { case (k, f) => k -> derive(f) }.toMap
-              specs.foreach(sp =>
-                applyFoldBatch(spark, dirOf(sp.name), batchId,
-                  sp.input.map(derived).getOrElse(pinned.toDF()),
-                  sp.fold, retain))
-            } else {
-            implicit val iec: scala.concurrent.ExecutionContext = ec
-            def inPool[T](body: => T): T = {
-              // under a FAIR scheduler each fold's jobs land in the
-              // shared "graft_folds" pool so N stores split executor
-              // slots evenly instead of FIFO-starving the later folds;
-              // a local property is per-thread, so set it on the pool
-              // thread actually submitting the jobs (no-op under FIFO)
-              spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "graft_folds")
-              body
-            }
-            val derivedFut: Map[String, scala.concurrent.Future[org.apache.spark.sql.DataFrame]] =
-              shared.map { case (k, f) =>
-                k -> scala.concurrent.Future(inPool(derive(f)))
-              }.toMap
-            val futs = specs.map(sp => sp.input match {
-              case None => scala.concurrent.Future(inPool(
+            val derivedFut = shared.map { case (k, f) =>
+              k -> pool.submit(derive(f))
+            }.toMap
+            pool.awaitAll(specs.map(sp => sp.input match {
+              case None => pool.submit(
                 applyFoldBatch(spark, dirOf(sp.name), batchId, pinned.toDF(),
-                  sp.fold, retain)))
-              case Some(k) => derivedFut(k).map(d => inPool(
+                  sp.fold, retain))
+              case Some(k) => derivedFut(k).flatMap(d => pool.submit(
                 applyFoldBatch(spark, dirOf(sp.name), batchId, d,
-                  sp.fold, retain)))
-            })
-            // drain ALL futures before rethrowing the first failure:
-            // a fold still mid-publish when the trigger fails would
-            // otherwise race the teardown (its commit protocol is
-            // crash-safe regardless — this just keeps the failure
-            // path orderly)
-            val settled = futs.map(f => scala.util.Try(
-              scala.concurrent.Await.result(
-                f, scala.concurrent.duration.Duration.Inf)))
-            settled.collectFirst { case scala.util.Failure(e) => throw e }
-            }
+                  sp.fold, retain)))(pool.ec)
+            }))
           } finally {
             derivedPinned.synchronized(derivedPinned.toVector)
               .foreach(_.unpersist())

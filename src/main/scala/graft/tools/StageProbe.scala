@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 /** Diagnostic harness: run ONE query from SparkEntry with a
@@ -15,16 +14,7 @@ object StageProbe {
     val names = args(0).split(',').toSeq
     val repeats = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     case class St(id: Int, nameLine: String, wallMs: Long, runMs: Long,
                   cpuMs: Long, tasks: Int, recordsIn: Long, recordsOut: Long)
     // appended from the listener-bus thread, read/cleared from main:
@@ -51,8 +41,8 @@ object StageProbe {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are posted async; give the bus a moment to drain
-      Thread.sleep(1000)
+      // listener events are posted async; wait until the bus drains
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       val snap = stages.synchronized(stages.toVector)
       println(f"== run $r: $name total ${wall}%.2f s, ${snap.size} stages")
       // full-run totals over ALL stages (round 14): top-15 sums are not

@@ -607,6 +607,24 @@ class OpsSpec extends AnyFunSuite {
       (5, 0L), (6, 0L)), audit.mkString(", "))
   }
 
+  test("Observation.get returns after a parquet write action (label-propagation early exit)") {
+    // minLabelPropagate reads its change count from an Observation
+    // riding the staging write; if Spark stopped firing observations
+    // for write commands, get would block forever — fail instead
+    val obs = org.apache.spark.sql.Observation()
+    val dir = java.nio.file.Files.createTempDirectory("obs_write").toString
+    spark.range(100)
+      .select(col("id"), (col("id") % 3 === 0).as("chg"))
+      .observe(obs, count(when(col("chg"), lit(1))).as("n_changed"))
+      .select(col("id"))
+      .write.mode("overwrite").parquet(s"$dir/out")
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val m = Await.result(Future(obs.get)(ExecutionContext.global),
+      scala.concurrent.duration.Duration(30, "s"))
+    assert(m("n_changed") == 34L)
+    graft.io.FsOps.rm(spark, dir)
+  }
+
   test("span ingest lifecycle plan: a stored index means the corpus is NEVER rescanned") {
     // the 100 TB contract both incremental span ops document: with the
     // spanIndex persisted, steady-state ingest reads ONLY the batch
